@@ -64,15 +64,19 @@ object Bench {
     val kgSec = (System.nanoTime() - t0) / 1e9
     val triplesPerSec = if (kgSec > 0 && nTriples > 0) nTriples / kgSec else 0.0
 
+    // a query that throws is still timed (its key keeps its meaning) and
+    // is also listed under "failed", so a short total is not misread
+    val failed = Seq.newBuilder[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val s0 = System.nanoTime()
       try { fn(spark, sfDir).count() }
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: $e"); -1L }
+        System.err.println(s"[bench] $name failed: $e"); failed += name; -1L }
       name -> (System.nanoTime() - s0) / 1e9
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedJson = failed.result().map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = kgSec + results.map(_._2).sum
 
     // approximate ops graded against their exact ground truths:
@@ -166,7 +170,7 @@ object Bench {
     // phase) and after the full run, so a window that turns noisy MID-run
     // shows as a pre/post split rather than silently inflating the walls
     val memcpyPost = memcpyMbs()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","kg_pipeline_sec":$kgSec,"kg_triples":$nTriples,"triples_per_sec":$triplesPerSec,"ann_recall_at_10":$annRecall,"ivf_recall_at_10":$ivfRecall,"ivf_recall_at_10_probe64":$ivfRecall64,"quant_recall_at_10":$quantRecall,"lsh_neardup_pair_recall":$lshRecall,"lsh_contract_recall":$lshContractRecall,"host_memcpy_mbs_pre":$memcpyPre,"host_memcpy_mbs_post":$memcpyPost,"host_loadavg":${loadAvg()}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","kg_pipeline_sec":$kgSec,"kg_triples":$nTriples,"triples_per_sec":$triplesPerSec,"ann_recall_at_10":$annRecall,"ivf_recall_at_10":$ivfRecall,"ivf_recall_at_10_probe64":$ivfRecall64,"quant_recall_at_10":$quantRecall,"lsh_neardup_pair_recall":$lshRecall,"lsh_contract_recall":$lshContractRecall,"host_memcpy_mbs_pre":$memcpyPre,"host_memcpy_mbs_post":$memcpyPost,"host_loadavg":${loadAvg()},"failed":$failedJson}"""
     println(line)
     // driver-parse-proof copy: sbt interleaves Spark INFO lines on stdout,
     // so the driver's tail-extraction can miss the metric line — also

@@ -8,15 +8,19 @@ import org.apache.spark.sql.SparkSession
   * graft.Bench. The FROZEN graft.Bench stays the artifact of record;
   * this main exists for optimization evidence (OPTIMIZATION_r06.md).
   *
-  * Usage: runMain graft.BenchExtra [reps] [query ...]
+  * Usage: runMain graft.BenchExtra [reps] [query ...] (reps defaults to 2)
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as Bench). */
 object BenchExtra {
   def main(args: Array[String]): Unit = {
-    val reps = args.headOption.map(_.toInt).getOrElse(2)
+    // reps is optional: a first argument that is not a number is a query
+    val (reps, queryArgs) = args.headOption.flatMap(_.toIntOption) match {
+      case Some(n) => (n, args.drop(1).toSeq)
+      case None => (2, args.toSeq)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names =
-      if (args.length > 1) args.drop(1).toSeq
+      if (queryArgs.nonEmpty) queryArgs
       else SparkEntry.queries.keys.toSeq.sorted
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

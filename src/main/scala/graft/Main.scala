@@ -42,8 +42,8 @@ object Main {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     val (n, wall) = run(spark, input, outRoot)
-    // q(): paths with quotes/backslashes must not produce invalid JSON
-    println(s"""{"triples":$n,"sec":$wall,"out":${kg.Store.q(outRoot)},"input":${kg.Store.q(input)}}""")
+    println(kg.Store.json.writeValueAsString(scala.collection.immutable.ListMap(
+      "triples" -> n, "sec" -> wall, "out" -> outRoot, "input" -> input)))
     spark.stop()
   }
 

@@ -35,17 +35,17 @@ object SparkEntry {
   private def triplesFor(spark: SparkSession, dir: String): DataFrame =
     tripleCache.getOrElseUpdate(dir, {
       val (nFiles, spf) = Synth.sizeForSfDir(dir)
-      // set-semantics committed emit (what the composed-pipeline oracles
-      // value-check — the gold export is a set by construction): one
-      // pass, dedup on all six columns, EAGER localCheckpoint. The
-      // checkpoint truncates lineage so follow-up kg_* aggregates plan
-      // against a flat LogicalRDD in milliseconds — with a persisted
-      // frame each query re-canonicalized the whole pipeline DAG during
-      // cache lookup, ~9 s of pure DRIVER time per query (this, not GC,
-      // was the round-3 kg_entities_top bench residual). The
-      // cluster-scale analog of this snapshot is the Store stage commit
-      // in Pipeline.runCheckpointed.
-      Triples.fromFilesDistinctCommitted(spark, Synth.corpus(spark, nFiles, spf))
+      // set-semantics materialized emit (what the composed-pipeline
+      // oracles value-check — the gold export is a set by construction):
+      // one pass, EAGER localCheckpoint. The checkpoint truncates lineage
+      // so follow-up kg_* aggregates plan against a flat LogicalRDD in
+      // milliseconds — with a persisted frame each query re-canonicalized
+      // the whole pipeline DAG during cache lookup, ~9 s of pure DRIVER
+      // time per query (this, not GC, was the round-3 kg_entities_top
+      // bench residual). The cluster-scale analog of this snapshot is the
+      // Store stage commit in Pipeline.runCheckpointed.
+      Triples.materialize(spark,
+        Pipeline.annotate(spark, Synth.corpus(spark, nFiles, spf)), distinct = true)
     })
 
   /** The PRIOR corpus snapshot for kg_snapshot_delta: the first half of
@@ -55,8 +55,8 @@ object SparkEntry {
   private def priorTriplesFor(spark: SparkSession, dir: String): DataFrame =
     tripleCache.getOrElseUpdate(s"$dir#prior", {
       val (nFiles, spf) = Synth.sizeForSfDir(dir)
-      Triples.fromFilesDistinctCommitted(spark,
-        Synth.corpus(spark, math.max(1L, nFiles / 2), spf))
+      Triples.materialize(spark, Pipeline.annotate(spark,
+        Synth.corpus(spark, math.max(1L, nFiles / 2), spf)), distinct = true)
     })
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -151,6 +151,20 @@ object SparkEntry {
   private val GoldenCorpora =
     Seq("test_ace", "test_tbd", "dev_ace", "dev_tbd", "train_tbd")
 
+  /** The DuckDB oracles' scan of all five golden corpora: CTE `f(src, j)`,
+    * one parsed JSON array per corpus file. */
+  private val goldenScanCte: String =
+    "f AS (SELECT regexp_extract(filename, '([a-z_]+)\\.pred\\.json', 1) AS src, json(content) AS j\n" +
+      "           FROM read_text(" + GoldenCorpora
+        .map(c => s"'${graft.sources.Sources.GoldenDir}/$c.pred.json'")
+        .mkString("[", ",\n" + " " * 27, "]") + ")),"
+  private val goldenWith = "WITH " + goldenScanCte
+  private val goldenWithRecursive = "WITH RECURSIVE " + goldenScanCte
+
+  /** The oracles' scan of one golden corpus: CTE `f(j)`. */
+  private def goldenJsonCte(corpus: String): String =
+    s"f AS (SELECT json(content) AS j FROM read_text('${graft.sources.Sources.GoldenDir}/$corpus.pred.json')),"
+
   /** All five reference golden corpora as one annotation frame with a
     * `src` column — shared by every golden-data query
     * (q30/q33/q34/q35/q38/q39/q40/q43 and, through [[goldenStages]],
@@ -167,7 +181,7 @@ object SparkEntry {
       GoldenCorpora
         .map { f =>
           graft.sources.Sources.readAnnotationArray(s,
-            s"/root/reference/component/Duration/Mu_test_data/$f.pred.json")
+            graft.sources.Sources.goldenCorpus(f))
             .withColumn("src", lit(f))
         }.reduce(_ unionByName _)
         .localCheckpoint()
@@ -183,14 +197,12 @@ object SparkEntry {
     TrieMap.empty[String, (DataFrame, DataFrame)]
   private def goldenStages(s: SparkSession,
       corpus: String): (DataFrame, DataFrame) =
-    goldenStageCache.getOrElseUpdate(corpus, {
+    goldenStageCache.getOrElseUpdate(corpus, Pipeline.releasing { held =>
       val ann = Pipeline.fromAnnotations(s,
         goldenAnn(s).filter(col("src") === corpus),
         "eventplus", s"Mu_test_data/$corpus.pred.json")
-      val tagged = ann.tagged.toDF().localCheckpoint()
-      val events = ann.events.localCheckpoint()
-      ann.caches.foreach(_.unpersist())
-      (tagged, events)
+      held ++= ann.caches
+      (ann.tagged.toDF().localCheckpoint(), ann.events.localCheckpoint())
     })
 
   /** Typed views of [[goldenStages]] unioned across all five corpora —
@@ -264,13 +276,16 @@ object SparkEntry {
       import s.implicits._
       // stage snapshots from the shared golden cache (goldenStages) — the
       // round-4 variant re-ingested test_ace.pred.json per call;
-      // emitCommitted, not emit: Bench iterates every query in one session,
-      // and the lazy emit would retain events/formMap/blockCanon caches
+      // materialize, not emit: Bench iterates every query in one session,
+      // and the lazy emit would retain events/formMap/blockCanon caches.
+      // Bag semantics (no dedup): the rows its DuckDB oracle was written
+      // against
       val (tagged, events) = goldenStages(s, "test_ace")
       val emptyRels = s.emptyDataset[(String, Int, Int, String)]
         .toDF("sentKey", "lAligned", "rAligned", "label")
-      Triples.emitCommitted(s,
-        Pipeline.Annotated(tagged.as[Pipeline.TaggedSentence], events, emptyRels))
+      Triples.materialize(s,
+        Pipeline.Annotated(tagged.as[Pipeline.TaggedSentence], events, emptyRels),
+        distinct = false)
         .select("subj", "pred", "obj").orderBy("subj", "pred", "obj")
     }),
 
@@ -838,7 +853,7 @@ object SparkEntry {
       // match uses (EventPipeline.tri_partial_match:87-98). Distinct arg
       // spans (duplicate events in the goldens carry repeated arguments).
       val ann = graft.sources.Sources.readAnnotationArray(s,
-        "/root/reference/component/Duration/Mu_test_data/test_ace.pred.json")
+        graft.sources.Sources.goldenCorpus("test_ace"))
       val args = ann
         .select(col("rec_idx").cast("long").as("rec_idx"),
           explode(col("events")).as("ev"))
@@ -874,7 +889,7 @@ object SparkEntry {
       // half-even 4-decimal rounding (round_even) — independently.
       import s.implicits._
       val ann = graft.sources.Sources.readAnnotationArray(s,
-        "/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json")
+        graft.sources.Sources.goldenCorpus("test_tbd"))
       import graft.tag.Taggers
       import org.apache.spark.sql.Row
       val prefix = "eventplus/Mu_test_data/test_tbd.pred.json#L0:S"
@@ -1934,13 +1949,7 @@ object SparkEntry {
         |FROM joined ORDER BY doc_id, tok_idx""".stripMargin
 
   private val q50TriggerQuerySql: String =
-    "WITH RECURSIVE " +
-      """f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+    goldenWithRecursive + """
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx,
         |                unnest(json_extract(j, '$[*]')) AS rec FROM f),
         |tok AS (SELECT src, rec_idx, CAST(rec->'$.tokens' AS VARCHAR[]) AS tokens,
@@ -1975,12 +1984,7 @@ object SparkEntry {
     * selects the spans directly, q43 evals them against the golden `ner`
     * field. */
   private val gazWalkCtes: String =
-    """WITH RECURSIVE f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-      |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-      |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-      |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-      |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-      |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+    goldenWithRecursive + """
       |g2(w1, w2, typ) AS (VALUES ('George','Pataki','PER'), ('Mary','Jones','PER'), ('John','Smith','PER'), ('Elena','Garcia','PER'), ('Wei','Chen','PER'), ('Amir','Hassan','PER'), ('the','president','PER'), ('the','governor','PER'), ('the','senator','PER'), ('New','York','GPE'), ('the','Army','ORG'), ('the','Senate','ORG'), ('Acme','Corp','ORG'), ('Globex','Inc','ORG'), ('the','court','ORG'), ('the','police','ORG'), ('the','airport','FAC'), ('the','bridge','FAC'), ('the','hospital','FAC'), ('the','river','LOC'), ('the','border','LOC'), ('a','truck','VEH'), ('the','convoy','VEH'), ('a','rifle','WEA'), ('the','missile','WEA'), ('Persian','Gulf','LOC')),
       |g1(w1, typ) AS (VALUES ('Baghdad','GPE'), ('France','GPE'), ('Texas','GPE'), ('Kabul','GPE'), ('California','GPE'), ('U.S.','GPE'), ('Army','ORG'), ('soldiers','PER'), ('region','LOC'), ('governor','PER'), ('counties','GPE'), ('Pataki','PER'), ('Jones','PER'), ('Smith','PER'), ('Garcia','PER'), ('Chen','PER'), ('Hassan','PER')),
       |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx, unnest(json_extract(j,'$[*]')) AS rec FROM f),
@@ -2109,9 +2113,9 @@ object SparkEntry {
     // normalization with half-even 4-decimal rounding (round_even =
     // Scala math.rint).
     "kg_timeline_golden" ->
-      """WITH RECURSIVE
+      ("""WITH RECURSIVE
         |conn(tok, lab) AS (VALUES ('before','BEFORE'),('until','BEFORE'),('after','AFTER'),('once','AFTER'),('while','SIMULTANEOUS'),('during','SIMULTANEOUS'),('as','SIMULTANEOUS'),('when','VAGUE'),('and','NONE')),
-        |f AS (SELECT json(content) AS j FROM read_text('/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json')),
+        |""".stripMargin + goldenJsonCte("test_tbd") + """
         |recs AS (SELECT unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx, unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |tok AS (SELECT rec_idx, CAST(rec->'$.tokens' AS VARCHAR[]) AS tokens, rec FROM recs),
         |heads0 AS (SELECT DISTINCT rec_idx, CAST(tr->>'$.start_token' AS INTEGER) AS h
@@ -2140,19 +2144,14 @@ object SparkEntry {
         |SELECT 'eventplus/Mu_test_data/test_tbd.pred.json' AS doc, v AS eventId,
         |  CASE WHEN span = 0 THEN 0.0
         |       ELSE round_even((CAST(t - lo AS DOUBLE) / span) * 10000, 0) / 10000 END AS t
-        |FROM tval, stats ORDER BY doc, eventId""".stripMargin,
+        |FROM tval, stats ORDER BY doc, eventId""".stripMargin),
 
     // q40: the argument selection pipeline in SQL — segment bounds
     // via delimiter comprehensions, RoleMap VALUES, compatibility
     // CASEs, windowed last-subject / first-object / last-location
     // picks with the prep-marked and chosen-object exclusions.
     "q40_argument_spans" ->
-      """WITH RECURSIVE f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWithRecursive + """
         |g2(w1, w2, typ) AS (VALUES ('George','Pataki','PER'), ('Mary','Jones','PER'), ('John','Smith','PER'), ('Elena','Garcia','PER'), ('Wei','Chen','PER'), ('Amir','Hassan','PER'), ('the','president','PER'), ('the','governor','PER'), ('the','senator','PER'), ('New','York','GPE'), ('the','Army','ORG'), ('the','Senate','ORG'), ('Acme','Corp','ORG'), ('Globex','Inc','ORG'), ('the','court','ORG'), ('the','police','ORG'), ('the','airport','FAC'), ('the','bridge','FAC'), ('the','hospital','FAC'), ('the','river','LOC'), ('the','border','LOC'), ('a','truck','VEH'), ('the','convoy','VEH'), ('a','rifle','WEA'), ('the','missile','WEA'), ('Persian','Gulf','LOC')),
         |g1(w1, typ) AS (VALUES ('Baghdad','GPE'), ('France','GPE'), ('Texas','GPE'), ('Kabul','GPE'), ('California','GPE'), ('U.S.','GPE'), ('Army','ORG'), ('soldiers','PER'), ('region','LOC'), ('governor','PER'), ('counties','GPE'), ('Pataki','PER'), ('Jones','PER'), ('Smith','PER'), ('Garcia','PER'), ('Chen','PER'), ('Hassan','PER')),
         |irr(surface, lemma) AS (VALUES ('acquired','acquire'), ('acquitted','acquit'), ('announced','announce'), ('appealed','appeal'), ('appointed','appoint'), ('arrested','arrest'), ('arrived','arrive'), ('attacked','attack'), ('began','begin'), ('bombed','bomb'), ('bought','buy'), ('called','call'), ('charged','charge'), ('continued','continue'), ('convicted','convict'), ('decided','decide'), ('deployed','deploy'), ('died','die'), ('dissolved','dissolve'), ('divorced','divorce'), ('donated','donate'), ('elected','elect'), ('ended','end'), ('executed','execute'), ('expected','expect'), ('extradited','extradite'), ('fined','fine'), ('founded','found'), ('happened','happen'), ('hired','hire'), ('indicted','indict'), ('injured','injure'), ('invaded','invade'), ('jailed','jail'), ('left','leave'), ('marched','march'), ('married','marry'), ('merged','merge'), ('met','meet'), ('nominated','nominate'), ('paid','pay'), ('pardoned','pardon'), ('paroled','parole'), ('perished','perish'), ('planned','plan'), ('protested','protest'), ('reported','report'), ('resigned','resign'), ('retired','retire'), ('returned','return'), ('said','say'), ('sentenced','sentence'), ('sold','sell'), ('sued','sue'), ('testified','testify'), ('toured','tour'), ('traveled','travel'), ('visited','visit'), ('wed','wed'), ('wounded','wound'), ('wrote','write')),
@@ -2247,18 +2246,13 @@ object SparkEntry {
         |SELECT src, rec_idx, CAST(sp - 1 AS INTEGER) AS trig_start, role,
         |  CAST(ea - 1 AS INTEGER) AS arg_start, CAST(eb - 1 AS INTEGER) AS arg_end,
         |  array_to_string(tokens[ea : eb], ' ') AS arg_text
-        |FROM allargs ORDER BY src, rec_idx, trig_start, role, arg_start""".stripMargin,
+        |FROM allargs ORDER BY src, rec_idx, trig_start, role, arg_start""".stripMargin),
 
     // q39: entity-masked trigger lexicon + adjacent-B run merge in
     // SQL (gazetteer walk for the mask, lemma CASE chain, inlined
     // trigger lexicon, gaps-and-islands span merge).
     "q39_trigger_spans" ->
-      """WITH RECURSIVE f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWithRecursive + """
         |g2(w1, w2) AS (VALUES ('George','Pataki'), ('Mary','Jones'), ('John','Smith'), ('Elena','Garcia'), ('Wei','Chen'), ('Amir','Hassan'), ('the','president'), ('the','governor'), ('the','senator'), ('New','York'), ('the','Army'), ('the','Senate'), ('Acme','Corp'), ('Globex','Inc'), ('the','court'), ('the','police'), ('the','airport'), ('the','bridge'), ('the','hospital'), ('the','river'), ('the','border'), ('a','truck'), ('the','convoy'), ('a','rifle'), ('the','missile'), ('Persian','Gulf')),
         |g1(w1) AS (VALUES ('Baghdad'), ('France'), ('Texas'), ('Kabul'), ('California'), ('U.S.'), ('Army'), ('soldiers'), ('region'), ('governor'), ('counties'), ('Pataki'), ('Jones'), ('Smith'), ('Garcia'), ('Chen'), ('Hassan')),
         |irr(surface, lemma) AS (VALUES ('acquired','acquire'), ('acquitted','acquit'), ('announced','announce'), ('appealed','appeal'), ('appointed','appoint'), ('arrested','arrest'), ('arrived','arrive'), ('attacked','attack'), ('began','begin'), ('bombed','bomb'), ('bought','buy'), ('called','call'), ('charged','charge'), ('continued','continue'), ('convicted','convict'), ('decided','decide'), ('deployed','deploy'), ('died','die'), ('dissolved','dissolve'), ('divorced','divorce'), ('donated','donate'), ('elected','elect'), ('ended','end'), ('executed','execute'), ('expected','expect'), ('extradited','extradite'), ('fined','fine'), ('founded','found'), ('happened','happen'), ('hired','hire'), ('indicted','indict'), ('injured','injure'), ('invaded','invade'), ('jailed','jail'), ('left','leave'), ('marched','march'), ('married','marry'), ('merged','merge'), ('met','meet'), ('nominated','nominate'), ('paid','pay'), ('pardoned','pardon'), ('paroled','parole'), ('perished','perish'), ('planned','plan'), ('protested','protest'), ('reported','report'), ('resigned','resign'), ('retired','retire'), ('returned','return'), ('said','say'), ('sentenced','sentence'), ('sold','sell'), ('sued','sue'), ('testified','testify'), ('toured','tour'), ('traveled','travel'), ('visited','visit'), ('wed','wed'), ('wounded','wound'), ('wrote','write')),
@@ -2316,7 +2310,7 @@ object SparkEntry {
         |SELECT src, rec_idx, typ AS event_type,
         |  array_to_string(tokens[sp : ep], ' ') AS trig_text,
         |  CAST(sp - 1 AS INTEGER) AS start_tok, CAST(ep - 1 AS INTEGER) AS end_tok
-        |FROM spans ORDER BY src, rec_idx, start_tok""".stripMargin,
+        |FROM spans ORDER BY src, rec_idx, start_tok""".stripMargin),
 
     // q38: the greedy longest-match gazetteer scan (skip semantics
     // included) simulated as a recursive-CTE cursor walk.
@@ -2452,12 +2446,7 @@ object SparkEntry {
     // normLemma CASE chain, lexicon membership, the -ed morphology
     // heuristic, and the A1 mean>0.5 decision.
     "q35_head_evidence" ->
-      """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWith + """
         |irr(surface, lemma) AS (VALUES ('acquired','acquire'), ('acquitted','acquit'), ('announced','announce'), ('appealed','appeal'), ('appointed','appoint'), ('arrested','arrest'), ('arrived','arrive'), ('attacked','attack'), ('began','begin'), ('bombed','bomb'), ('bought','buy'), ('called','call'), ('charged','charge'), ('continued','continue'), ('convicted','convict'), ('decided','decide'), ('deployed','deploy'), ('died','die'), ('dissolved','dissolve'), ('divorced','divorce'), ('donated','donate'), ('elected','elect'), ('ended','end'), ('executed','execute'), ('expected','expect'), ('extradited','extradite'), ('fined','fine'), ('founded','found'), ('happened','happen'), ('hired','hire'), ('indicted','indict'), ('injured','injure'), ('invaded','invade'), ('jailed','jail'), ('left','leave'), ('marched','march'), ('married','marry'), ('merged','merge'), ('met','meet'), ('nominated','nominate'), ('paid','pay'), ('pardoned','pardon'), ('paroled','parole'), ('perished','perish'), ('planned','plan'), ('protested','protest'), ('reported','report'), ('resigned','resign'), ('retired','retire'), ('returned','return'), ('said','say'), ('sentenced','sentence'), ('sold','sell'), ('sued','sue'), ('testified','testify'), ('toured','tour'), ('traveled','travel'), ('visited','visit'), ('wed','wed'), ('wounded','wound'), ('wrote','write')),
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx, unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |tok AS (SELECT src, rec_idx, CAST(rec->'$.tokens' AS VARCHAR[]) AS tokens FROM recs
@@ -2484,18 +2473,13 @@ object SparkEntry {
         |  FROM lem)
         |SELECT src, rec_idx, tok_idx, lexical, morphological,
         |  CASE WHEN (lexical + morphological) / 2 > 0.5 THEN 1 ELSE 0 END AS is_head
-        |FROM ev ORDER BY src, rec_idx, tok_idx""".stripMargin,
+        |FROM ev ORDER BY src, rec_idx, tok_idx""".stripMargin),
 
     // q34: the negation cue labeling (0=affix, 1=cue, 2=multiword part,
     // 3=none; manual 'not' override wins) and first-cue-to-sentence-end
     // scope, re-derived per token in SQL.
     "q34_negation_scope" ->
-      """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWith + """
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx, unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |tok AS (SELECT src, rec_idx, CAST(rec->'$.tokens' AS VARCHAR[]) AS tokens,
         |               [lower(x) for x in CAST(rec->'$.tokens' AS VARCHAR[])] AS low FROM recs
@@ -2517,7 +2501,7 @@ object SparkEntry {
         |       WHEN l.ip >= fi.firstp AND NOT list_contains(['.','!','?'], l.tokens[l.ip]) THEN 1
         |       ELSE 0 END AS in_scope
         |FROM lab l LEFT JOIN firsts fi USING (src, rec_idx)
-        |ORDER BY src, rec_idx, tok_idx""".stripMargin,
+        |ORDER BY src, rec_idx, tok_idx""".stripMargin),
 
     // q33: the copular-predicate rules (back-scan to the nearest BE-form
     // inside the clause, verbal-root heuristic, clause-end extension,
@@ -2526,12 +2510,7 @@ object SparkEntry {
     // are case-insensitive — a column named `R` beside `r` silently
     // collides, hence the longhand names.)
     "q33_copular_predicates" ->
-      """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWith + """
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx, unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |tok AS (SELECT src, rec_idx, CAST(rec->'$.tokens' AS VARCHAR[]) AS tokens, rec FROM recs),
         |heads AS (SELECT DISTINCT src, rec_idx, CAST(tr->>'$.start_token' AS INTEGER) AS root_idx
@@ -2559,7 +2538,7 @@ object SparkEntry {
         |  CASE WHEN ep - sp + 1 > 5
         |       THEN array_to_string(tokens[sp : sp + 4], ' ') || '...'
         |       ELSE array_to_string(tokens[sp : ep], ' ') END AS pred_text
-        |FROM spans ORDER BY src, rec_idx, root_idx""".stripMargin,
+        |FROM spans ORDER BY src, rec_idx, root_idx""".stripMargin),
 
     // q32: q13's exact-Jaccard pair derivation + union-find as a
     // recursive CTE + the canonical-selection window, all in SQL.
@@ -2596,7 +2575,7 @@ object SparkEntry {
 
     // q31: the interval-containment join re-derived as plain SQL.
     "q31_contained_args" ->
-      """WITH f AS (SELECT json(content) AS j FROM read_text('/root/reference/component/Duration/Mu_test_data/test_ace.pred.json')),
+      ("WITH " + goldenJsonCte("test_ace") + """
         |recs AS (SELECT unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx, unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |args AS (SELECT DISTINCT rec_idx, a->>'$.role' AS role,
         |           CAST(a->>'$.start_token' AS INTEGER) AS a_start, CAST(a->>'$.end_token' AS INTEGER) AS a_end
@@ -2608,7 +2587,7 @@ object SparkEntry {
         |         WHERE json_array_length(n) = 3)
         |SELECT a.rec_idx, a.role, a.a_start, a.a_end, e.ent_label, e.n_start, e.n_end
         |FROM args a JOIN ents e ON a.rec_idx = e.rec_idx AND e.n_start <= a.a_start AND a.a_end <= e.n_end
-        |ORDER BY a.rec_idx, a.role, a.a_start, a.a_end, e.ent_label, e.n_start, e.n_end""".stripMargin,
+        |ORDER BY a.rec_idx, a.role, a.a_start, a.a_end, e.ent_label, e.n_start, e.n_end""".stripMargin),
 
     // q30: every golden span re-derived directly from the JSON with
     // list_slice — the engine side goes through bioEncode -> bioDecode ->
@@ -2619,12 +2598,7 @@ object SparkEntry {
     // '.'-strip on both sides, nearest-then-lowest-index pick as a
     // window, and the containment anti-join as NOT EXISTS.
     "q41_align_inject" ->
-      """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWith + """
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx,
         |                unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |tok AS (SELECT src, CAST(rec_idx AS INTEGER) AS ri,
@@ -2666,19 +2640,14 @@ object SparkEntry {
         |                 'eventplus/Mu_test_data/' || src || '.pred.json#L0:S' || ri,
         |                 alignedidx, alignedidx, btok FROM inj)
         |SELECT kind, sent_key, idx_in, idx_out, tok FROM keyed
-        |ORDER BY kind, sent_key, idx_in, idx_out""".stripMargin,
+        |ORDER BY kind, sent_key, idx_in, idx_out""".stripMargin),
 
     // q42: the duration + speculation enrichment in SQL — irregular-past
     // + suffix-strip lemma chain, the trigger-duration lexicon as VALUES,
     // blank for unmatched lemmas (J2), and the q34 first-cue scope rule
     // evaluated at the trigger position (P9).
     "q42_duration_speculation" ->
-      """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWith + """
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx,
         |                unnest(json_extract(j,'$[*]')) AS rec FROM f),
         |tok AS (SELECT src, CAST(rec_idx AS INTEGER) AS ri,
@@ -2721,7 +2690,7 @@ object SparkEntry {
         |LEFT JOIN durlex d USING (lemma)
         |LEFT JOIN firsts fi ON fi.src = l.src AND fi.ri = l.ri
         |JOIN tok t ON t.src = l.src AND t.ri = l.ri
-        |ORDER BY sent_key, trig_start""".stripMargin,
+        |ORDER BY sent_key, trig_start""".stripMargin),
 
     // q44/q45 run at a FIXED corpus size (60 files × 6 sentences — the
     // sf0.001 shape) regardless of the scale directory, so the oracle
@@ -3421,12 +3390,7 @@ object SparkEntry {
         |ORDER BY a.media_id, b.bin""".stripMargin,
 
     "q30_golden_spans" ->
-      """WITH f AS (SELECT regexp_extract(filename, '([a-z_]+)\.pred\.json', 1) AS src, json(content) AS j
-        |           FROM read_text(['/root/reference/component/Duration/Mu_test_data/test_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/test_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_ace.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/dev_tbd.pred.json',
-        |                           '/root/reference/component/Duration/Mu_test_data/train_tbd.pred.json'])),
+      (goldenWith + """
         |recs AS (SELECT src, unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx,
         |                unnest(json_extract(j, '$[*]')) AS rec FROM f),
         |tok AS (SELECT src, rec_idx, CAST(rec->'$.tokens' AS VARCHAR[]) AS tokens, rec FROM recs),
@@ -3448,7 +3412,7 @@ object SparkEntry {
         |        FROM argrows)
         |SELECT src, rec_idx, kind, label, start_tok, end_tok, span_text
         |FROM (SELECT * FROM ner UNION ALL SELECT * FROM trig UNION ALL SELECT * FROM args)
-        |ORDER BY src, rec_idx, kind, start_tok, end_tok, label""".stripMargin,
+        |ORDER BY src, rec_idx, kind, start_tok, end_tok, label""".stripMargin),
 
     // kg_from_annotations: full SQL re-derivation of the KG relational
     // back half over the reference golden snapshot — JSON explode, P5
@@ -3458,9 +3422,9 @@ object SparkEntry {
     // Ontology.SurfaceToLemma; the suffix CASE chains mirror
     // Text.normLemma.
     "kg_from_annotations" ->
-      """WITH RECURSIVE
+      ("""WITH RECURSIVE
         |irr(surface, lemma) AS (VALUES ('toured','tour'), ('traveled','travel'), ('deployed','deploy'), ('arrived','arrive'), ('attacked','attack'), ('bombed','bomb'), ('invaded','invade'), ('protested','protest'), ('marched','march'), ('met','meet'), ('visited','visit'), ('called','call'), ('wrote','write'), ('acquitted','acquit'), ('appealed','appeal'), ('arrested','arrest'), ('jailed','jail'), ('indicted','indict'), ('charged','charge'), ('convicted','convict'), ('executed','execute'), ('extradited','extradite'), ('fined','fine'), ('pardoned','pardon'), ('paroled','parole'), ('sentenced','sentence'), ('sued','sue'), ('testified','testify'), ('died','die'), ('perished','perish'), ('divorced','divorce'), ('injured','injure'), ('wounded','wound'), ('married','marry'), ('wed','wed'), ('elected','elect'), ('resigned','resign'), ('retired','retire'), ('nominated','nominate'), ('appointed','appoint'), ('hired','hire'), ('paid','pay'), ('donated','donate'), ('bought','buy'), ('sold','sell'), ('acquired','acquire'), ('founded','found'), ('merged','merge'), ('dissolved','dissolve'), ('said','say'), ('announced','announce'), ('reported','report'), ('began','begin'), ('continued','continue'), ('ended','end'), ('happened','happen'), ('expected','expect'), ('planned','plan'), ('decided','decide'), ('returned','return'), ('left','leave')),
-        |f AS (SELECT json(content) AS j FROM read_text('/root/reference/component/Duration/Mu_test_data/test_ace.pred.json')),
+        |""".stripMargin + goldenJsonCte("test_ace") + """
         |recs AS (SELECT unnest(range(CAST(json_array_length(j) AS BIGINT))) AS rec_idx,
         |                unnest(json_extract(j, '$[*]')) AS rec FROM f),
         |sk AS (SELECT rec_idx,
@@ -3522,7 +3486,7 @@ object SparkEntry {
         |SELECT subj, pred, obj FROM (
         |  SELECT * FROM hasType UNION ALL SELECT * FROM argT
         |  UNION ALL SELECT * FROM hasEnt UNION ALL SELECT * FROM sameAs)
-        |ORDER BY subj, pred, obj""".stripMargin,
+        |ORDER BY subj, pred, obj""".stripMargin),
     "q1_agg" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(ROUND(SUM(l_quantity)) AS BIGINT) AS sum_qty,

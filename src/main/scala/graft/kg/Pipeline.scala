@@ -1,5 +1,7 @@
 package graft.kg
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -64,15 +66,27 @@ object Pipeline {
 
   /** S1 + P1: source files → sentences, tokenized ONCE (the reference
     * re-tokenizes per component and fuzz-joins, SURVEY.md J1; we share).
-    * The flatMap is narrow — no shuffle. */
-  def sentences(spark: SparkSession, files: Dataset[SourceFile]): Dataset[Sentence] = {
+    * The flatMap is narrow — no shuffle. Quarantine-aware: a record whose
+    * extraction throws becomes a quarantine row instead of being
+    * swallowed (the reference's try/except drop,
+    * test_on_raw_text.py:107-117 — SURVEY.md §2.9). */
+  case class SentOrErr(sent: Option[Sentence], err: Option[QuarantineRow])
+
+  def extract(spark: SparkSession, files: Dataset[SourceFile]): Dataset[SentOrErr] = {
     import spark.implicits._
     files.flatMap { f =>
-      val sha = Text.sha256(f.content)
-      Text.naturalText(f.lang, f.content).flatMap { case (lineNum, text) =>
-        Text.sentSplit(text).zipWithIndex.map { case (sent, senNum) =>
-          Sentence(f.repo, f.path, sha, lineNum, senNum, sent, Text.tokenize(sent))
+      try {
+        val sha = Text.sha256(f.content)
+        Text.naturalText(f.lang, f.content).flatMap { case (lineNum, text) =>
+          Text.sentSplit(text).zipWithIndex.map { case (sent, senNum) =>
+            SentOrErr(Some(Sentence(f.repo, f.path, sha, lineNum, senNum, sent,
+              Text.tokenize(sent))), None)
+          }
         }
+      } catch {
+        case e: Exception =>
+          Seq(SentOrErr(None, Some(QuarantineRow(f.repo, f.path, -1, -1,
+            "extract", e.toString.take(500)))))
       }
     }
   }
@@ -329,41 +343,27 @@ object Pipeline {
       .drop("negationScope")
   }
 
-  /** Quarantine-aware extraction: per-record failures become rows in a
-    * quarantine table instead of being swallowed (the reference's
-    * try/except drop, test_on_raw_text.py:107-117 — SURVEY.md §2.9). */
-  case class SentOrErr(sent: Option[Sentence], err: Option[QuarantineRow])
-
-  def extract(spark: SparkSession, files: Dataset[SourceFile]): Dataset[SentOrErr] = {
-    import spark.implicits._
-    files.flatMap { f =>
-      try {
-        val sha = Text.sha256(f.content)
-        Text.naturalText(f.lang, f.content).flatMap { case (lineNum, text) =>
-          Text.sentSplit(text).zipWithIndex.map { case (sent, senNum) =>
-            SentOrErr(Some(Sentence(f.repo, f.path, sha, lineNum, senNum, sent,
-              Text.tokenize(sent))), None)
-          }
-        }
-      } catch {
-        case e: Exception =>
-          Seq(SentOrErr(None, Some(QuarantineRow(f.repo, f.path, -1, -1,
-            "extract", e.toString.take(500)))))
-      }
-    }
-  }
-
   // ---- full annotate: the composed DAG up to enriched events ----
 
   case class Annotated(
       tagged: Dataset[TaggedSentence],
       events: DataFrame, // EventRow + duration + speculation
       relations: DataFrame, // sentKey, lAligned, rAligned, label
-      // every frame persist()ed while building this Annotated — a
-      // long-lived session (Bench/serving) unpersists them once the
-      // downstream triple frame is materialized, instead of accumulating
-      // cached partitions per emit (Triples.emitCommitted does this)
+      // every frame persist()ed while building this Annotated — released
+      // by [[releasing]] once the triples are materialized
+      // (Triples.materialize, runCheckpointed), so a long-lived session
+      // (Bench/serving) does not accumulate cached partitions per build
       caches: Seq[DataFrame] = Seq.empty)
+
+  /** Runs a build that records in `held` every frame it persists, then
+    * unpersists them all when the build returns or throws — the one
+    * place the KG build releases its caches. The build's result must not
+    * read them lazily: it is a committed stage or an eager snapshot.
+    * Blocking, so their storage is free when this returns. */
+  def releasing[T](build: mutable.Buffer[DataFrame] => T): T = {
+    val held = mutable.ArrayBuffer.empty[DataFrame]
+    try build(held) finally held.foreach(_.unpersist(blocking = true))
+  }
 
   def annotate(spark: SparkSession, files: Dataset[SourceFile]): Annotated = {
     // ONE cached frame, one narrow fused stage: extraction flatMap →
@@ -376,7 +376,7 @@ object Pipeline {
     // round-trip + columnar cache write of the whole corpus (measured:
     // per-sentence tagging compute is ~0.15 ms while the stage cost
     // ~1.3 ms/row — the difference was Dataset encode/cache machinery).
-    // The COMMITTED path (runCheckpointed/extract) still materializes the
+    // The COMMITTED path (runCheckpointed) still materializes the
     // sentence stage — there the stored snapshot is the point.
     // persist (columnar cache), not localCheckpoint: tried both — the
     // checkpoint skips the columnar encode but loses column pruning, and
@@ -384,7 +384,15 @@ object Pipeline {
     // projections, so full-UnsafeRow scans cost MORE in total task time
     // (332 vs 285 s at sf0.1). The count materializes the cache before
     // the fan-out so broadcast threads never race a cold subtree.
-    val tagged = tagStage(spark, sentences(spark, files)).persist()
+    // There is no quarantine table here, so a record extract quarantines
+    // fails the build with its quarantine message instead of vanishing.
+    import spark.implicits._
+    val sents = extract(spark, files).flatMap { r =>
+      r.err.foreach(q => throw new IllegalStateException(
+        s"extract quarantined ${q.repo}/${q.path}: ${q.error}"))
+      r.sent
+    }
+    val tagged = tagStage(spark, sents).persist()
     tagged.count()
     val ann = annotateFrom(spark, tagged)
     ann.copy(caches = ann.caches :+ tagged.toDF())
@@ -502,43 +510,33 @@ object Pipeline {
   /** Checkpoint-resumable end-to-end run (north rule): every stage commits
     * an Iceberg-style snapshot + manifest via Store; a rerun resumes from
     * the last committed stage — compute closures of committed stages are
-    * never invoked. Returns the triple DataFrame (committed). */
+    * never invoked. Returns the triple DataFrame (committed); every frame
+    * cached on the way is released before it returns. */
   def runCheckpointed(spark: SparkSession, files: Dataset[SourceFile],
-      root: String, inputSig: String): DataFrame = {
+      root: String, inputSig: String): DataFrame = releasing { held =>
     import spark.implicits._
     val extracted = Store.runStage(spark, root, "sentences", inputSig) {
       val e = extract(spark, files).persist()
+      held += e.toDF()
       // quarantine commits alongside (same pass over the input)
       Store.runStage(spark, root, "quarantine", inputSig) {
         e.flatMap(_.err).toDF()
       }
-      val out = e.flatMap(_.sent)
-        .repartitionByRange(col("repo"), col("path"))
-        .toDF()
-      out
+      e.flatMap(_.sent).toDF()
     }
     val sents = extracted.as[Sentence]
     val tagged = Store.runStage(spark, root, "tagged", inputSig) {
       tagStage(spark, sents).toDF()
     }.as[TaggedSentence]
-    var annForced = false
-    lazy val ann = { annForced = true; annotateFrom(spark, tagged) }
+    // lazy: a resume that reads events and relations back never builds it
+    lazy val ann = { val a = annotateFrom(spark, tagged); held ++= a.caches; a }
     val events = Store.runStage(spark, root, "events", inputSig)(ann.events)
     val rels = Store.runStage(spark, root, "relations", inputSig)(ann.relations)
-    // capture emit's intermediate caches (events/formMap/blockCanon) so
-    // they release once the stage snapshot is committed — the lazy
-    // Triples.emit otherwise leaves them persisted for the session's
-    // lifetime. runStage skips the body entirely on resume, so the var
-    // stays empty (and nothing was cached) when the stage is committed.
-    var emitCaches: Seq[DataFrame] = Nil
-    val out = Store.runStage(spark, root, "triples", inputSig) {
-      val (frame, caches) =
-        Triples.emitWithCaches(spark, Annotated(tagged, events, rels))
-      emitCaches = caches
+    Store.runStage(spark, root, "triples", inputSig) {
+      val (frame, caches) = Triples.emitWithCaches(spark,
+        Annotated(tagged, events, rels), distinct = false)
+      held ++= caches
       frame
     }
-    emitCaches.foreach(_.unpersist())
-    if (annForced) ann.caches.foreach(_.unpersist())
-    out
   }
 }

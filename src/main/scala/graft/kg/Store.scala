@@ -2,6 +2,12 @@ package graft.kg
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.immutable.ListMap
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,14 +37,9 @@ object Store {
       schemaJson: String, metrics: Seq[(String, Long, Long)] = Seq.empty,
       wallSec: Double = 0.0)
 
-  private[graft] def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** JSON mapper for manifests and `graft.Main`'s result line. */
+  private[graft] val json: JsonMapper =
+    JsonMapper.builder().addModule(DefaultScalaModule).build()
 
   def manifestPath(root: String, stage: String): java.nio.file.Path =
     Paths.get(root, "_manifests", s"$stage.json")
@@ -46,59 +47,33 @@ object Store {
   def writeManifest(root: String, m: Manifest): Unit = {
     val dir = Paths.get(root, "_manifests")
     Files.createDirectories(dir)
-    val lineageJson = m.lineage
-      .map { case (p, n) => s"{${q("partition")}:${q(p)},${q("rows")}:$n}" }
-      .mkString("[", ",", "]")
-    val metricsJson = m.metrics
-      .map { case (p, f, b) =>
-        s"{${q("partition")}:${q(p)},${q("files")}:$f,${q("bytes")}:$b}" }
-      .mkString("[", ",", "]")
-    val json =
-      s"{${q("stage")}:${q(m.stage)},${q("inputSig")}:${q(m.inputSig)}," +
-        s"${q("rows")}:${m.rows},${q("lineage")}:$lineageJson," +
-        s"${q("metrics")}:$metricsJson," +
-        s"${q("wall_sec")}:${m.wallSec}," +
-        s"${q("committedAtNanos")}:${m.committedAtNanos}," +
-        s"${q("schema")}:${q(m.schemaJson)}}"
+    val doc = ListMap(
+      "stage" -> m.stage, "inputSig" -> m.inputSig, "rows" -> m.rows,
+      "lineage" -> m.lineage.map { case (p, n) =>
+        ListMap("partition" -> p, "rows" -> n) },
+      "metrics" -> m.metrics.map { case (p, f, b) =>
+        ListMap("partition" -> p, "files" -> f, "bytes" -> b) },
+      "wall_sec" -> m.wallSec, "committedAtNanos" -> m.committedAtNanos,
+      "schema" -> m.schemaJson)
     val tmp = dir.resolve(s"${m.stage}.json.tmp")
-    Files.writeString(tmp, json)
+    Files.writeString(tmp, json.writeValueAsString(doc))
     Files.move(tmp, manifestPath(root, m.stage),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Minimal field extraction (manifests are engine-written, flat JSON).
-    * Returns (inputSig, rows, schemaJson). */
+  /** Returns (inputSig, rows, schemaJson); None when the manifest is
+    * absent or unreadable. */
   def readManifest(root: String, stage: String): Option[(String, Long, String)] = {
     val p = manifestPath(root, stage)
     if (!Files.exists(p)) None
-    else {
-      val s = Files.readString(p)
-      val sig = "\"inputSig\":\"([^\"]*)\"".r.findFirstMatchIn(s).map(_.group(1))
-      val rows = "\"rows\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-      val schema = "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-        .findFirstMatchIn(s).map(m => unescape(m.group(1)))
-      for (a <- sig; b <- rows; c <- schema) yield (a, b, c)
+    else Try(json.readTree(p.toFile)).toOption.flatMap { m =>
+      def field(name: String) = Option(m.get(name))
+      for {
+        sig <- field("inputSig") if sig.isTextual
+        rows <- field("rows") if rows.isIntegralNumber
+        schema <- field("schema") if schema.isTextual
+      } yield (sig.asText, rows.asLong, schema.asText)
     }
-  }
-
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'u' =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 
   /** Run-or-resume a stage. If a manifest exists with a matching input

@@ -23,30 +23,37 @@ object Triples {
     * EventRow frame (with duration + speculation); `relations` is the
     * aligned relation frame. The returned frame is LAZY and depends on
     * caches persisted here and in Pipeline — short-lived sessions can
-    * consume it directly; long-lived sessions should use `emitCommitted`,
-    * which materializes the result and releases every intermediate
-    * cache. */
+    * consume it directly; long-lived sessions should use [[materialize]],
+    * which snapshots the result and releases every intermediate cache. */
   def emit(spark: SparkSession, ann: Pipeline.Annotated): DataFrame =
-    emitWithCaches(spark, ann)._1
+    emitWithCaches(spark, ann, distinct = false)._1
 
-  /** Materialized emit for long-lived sessions: persists the triple frame,
-    * fills the cache, then unpersists every intermediate cache (this
-    * emit's events/formMap/blockCanon AND the Annotated stage caches) so
-    * repeated pipeline runs don't accumulate executor storage.
-    * `numPartitions > 0` compacts the union (many small partitions) before
-    * caching. */
-  def emitCommitted(spark: SparkSession, ann: Pipeline.Annotated,
-      numPartitions: Int = 0): DataFrame = {
-    val (out, caches) = emitWithCaches(spark, ann)
-    val compacted = if (numPartitions > 0) out.repartition(numPartitions) else out
-    val cached = compacted.persist()
-    cached.count()
-    (caches ++ ann.caches).foreach(_.unpersist())
-    cached
+  /** Materialized emit: the triples as an EAGER localCheckpoint, with
+    * every intermediate cache (this emit's and `ann.caches`) released
+    * before returning, so repeated builds in one session don't
+    * accumulate executor storage. The checkpoint truncates lineage, so
+    * repeated queries against the returned frame plan against a flat
+    * LogicalRDD instead of re-canonicalizing the whole pipeline DAG
+    * (measured ~9 s of driver time per query on a persisted-lineage
+    * variant).
+    *
+    * `distinct` gives set semantics, deduplicated PER BRANCH inside the
+    * emit (arg and entity triples, the only two branches whose rows can
+    * repeat — every other branch emits at most one row per event id or
+    * per distinct (sentKey, l, r) pair by construction), so only ~40% of
+    * the union's rows cross a dedup shuffle instead of the whole
+    * six-string frame (GoldenPipelineSpec pins branch-dedup ≡
+    * global-dedup). Without it the rows are the bag `emit` produces. */
+  def materialize(spark: SparkSession, ann: Pipeline.Annotated,
+      distinct: Boolean): DataFrame = Pipeline.releasing { held =>
+    held ++= ann.caches
+    val (out, caches) = emitWithCaches(spark, ann, distinct)
+    held ++= caches
+    out.localCheckpoint()
   }
 
   private[kg] def emitWithCaches(spark: SparkSession,
-      ann: Pipeline.Annotated, distinct: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      ann: Pipeline.Annotated, distinct: Boolean): (DataFrame, Seq[DataFrame]) = {
     val events = ann.events.persist()
     // materialize the cache NOW: the canonicalization loop and the two
     // broadcast builds below otherwise race to each recompute the whole
@@ -66,17 +73,18 @@ object Triples {
         col("eventType").as("obj")) ++ lineage: _*)
 
     // (event, ROLE, canonicalized arg text) — coref-canonicalized (J5).
-    // formMap is cached: the broadcast-or-salt gate inside rewrite counts
-    // it, and recomputing the CC loop for the join would be a second full
-    // canonicalization
+    // formMap is cached: recomputing the CC loop for the join would be a
+    // second full canonicalization; the refined forms it reads stay
+    // cached until the caller releases them, or the map would re-run the
+    // block refinement when it is first evaluated
     val maxBroadcastRows =
       spark.conf.get("spark.graft.maxBroadcastRows", "1000000").toLong
     val argMentions = events
       .select((Seq(col("eventId"), explode(col("args")).as("arg")) ++ lineage): _*)
       .select(Seq(col("eventId"), col("arg.role").as("role"),
         col("arg.text").as("text")) ++ lineage: _*)
-    val (formMap0, nForms) =
-      Canonicalize.canonicalFormsCounted(spark, argMentions)
+    val (formMap0, nForms, forms) =
+      Canonicalize.canonicalFormsCached(spark, argMentions)
     val formMap = formMap0.persist()
     val argTriplesRaw = Canonicalize.rewrite(argMentions, formMap,
       maxBroadcastRows, formMapRows = nForms)
@@ -152,39 +160,7 @@ object Triples {
     val union = hasType.unionByName(argTriples).unionByName(durTriples)
       .unionByName(specTriples).unionByName(relTriples)
       .unionByName(entTriples).unionByName(sameAs)
-    (union, Seq(events, formMap, blockCanon))
-  }
-
-  /** End-to-end: source files → triples (lazy; see emit). */
-  def fromFiles(spark: SparkSession, files: Dataset[SourceFile]): DataFrame =
-    emit(spark, Pipeline.annotate(spark, files))
-
-  /** End-to-end, materialized, intermediates released (see emitCommitted). */
-  def fromFilesCommitted(spark: SparkSession, files: Dataset[SourceFile],
-      numPartitions: Int = 0): DataFrame =
-    emitCommitted(spark, Pipeline.annotate(spark, files), numPartitions)
-
-  /** Set-semantics committed emit, materialized via an EAGER
-    * localCheckpoint in a single pass — no intermediate persist of the raw
-    * union. Deduplication happens PER BRANCH inside the emit (arg and
-    * entity triples, the only two branches whose rows can repeat — every
-    * other branch emits at most one row per event id or per distinct
-    * (sentKey, l, r) pair by construction), so only ~40% of the union's
-    * rows cross a dedup shuffle instead of the whole six-string frame
-    * (the round-4 variant globally dropDuplicates'd all 527k rows; a
-    * DistinctEmitSpec pins branch-dedup ≡ global-dedup). The checkpoint
-    * truncates lineage, so repeated queries against the returned frame
-    * plan against a flat LogicalRDD instead of re-canonicalizing the
-    * whole pipeline DAG (measured ~9 s of driver time per query on the
-    * persisted-lineage variant). Every pipeline intermediate cache is
-    * released before returning. */
-  def fromFilesDistinctCommitted(spark: SparkSession,
-      files: Dataset[SourceFile]): DataFrame = {
-    val ann = Pipeline.annotate(spark, files)
-    val (out, caches) = emitWithCaches(spark, ann, distinct = true)
-    val snapped = out.localCheckpoint()
-    (caches ++ ann.caches).foreach(_.unpersist())
-    snapped
+    (union, Seq(events, forms, formMap, blockCanon))
   }
 
   /** Changelog between two KG snapshots: (op ∈ {add, del}, subj, pred,

@@ -131,9 +131,21 @@ object Canonicalize {
     * internally (one row per distinct (repo, text) — exactly the emitted
     * map's cardinality): callers feeding the map to a gated join can pass
     * the count as the gate's upper bound and skip the gate's own count()
-    * job — one fewer driver-blocking barrier per emit. */
+    * job — one fewer driver-blocking barrier per emit. The refined forms
+    * are released before returning, so evaluating the map re-runs the
+    * block refinement; [[canonicalFormsCached]] avoids that. */
   def canonicalFormsCounted(spark: SparkSession,
       mentions: DataFrame): (DataFrame, Long) = {
+    val (out, nForms, forms) = canonicalFormsCached(spark, mentions)
+    forms.unpersist()
+    (out, nForms)
+  }
+
+  /** [[canonicalFormsCounted]] plus the cached refined-forms frame the map
+    * reads: the caller releases it once the map is materialized, so the
+    * refinement (a distinct and two window shuffles) runs once. */
+  private[graft] def canonicalFormsCached(spark: SparkSession,
+      mentions: DataFrame): (DataFrame, Long, DataFrame) = {
     val maxBlock =
       spark.conf.get("spark.graft.maxBlockForms", "1000").toInt
     val forms = refineBlocks(mentions, maxBlock)
@@ -184,8 +196,7 @@ object Canonicalize {
       .select("repo", "text", "canonical")
       .unionByName(forms.filter(!col("kept"))
         .select(col("repo"), col("text"), col("text").as("canonical")))
-    forms.unpersist()
-    (out, nForms)
+    (out, nForms, forms)
   }
 
   /** Block refinement behind `canonicalForms`' quadratic cap: distinct

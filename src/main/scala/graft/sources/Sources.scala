@@ -60,6 +60,19 @@ object Sources {
         .as(Seq("rec_idx", "ann")))
       .select(col("rec_idx"), col("ann.*"))
 
+  /** Directory of the reference's golden annotation corpora
+    * (`<name>.pred.json`, one JSON array of records each). */
+  val GoldenDir = "/root/reference/component/Duration/Mu_test_data"
+
+  /** Path of golden corpus `name` (e.g. "test_ace"); fails with one
+    * message naming the path when the reference corpus is absent. */
+  def goldenCorpus(name: String): String = {
+    val path = s"$GoldenDir/$name.pred.json"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+      throw new java.io.FileNotFoundException(s"reference corpus absent at $path")
+    path
+  }
+
   /** The Duration-stage input explode: events × triggers → one row per
     * trigger (preprocess.py:104-113 — the UDTF/X1 shape as pure SQL). */
   def explodeTriggerRows(ann: DataFrame): DataFrame =

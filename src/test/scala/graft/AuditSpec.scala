@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 
 /** integrityAudit (q58): clean pipeline output audits empty; each planted
   * violation class is caught, and nothing else rides along. */
@@ -13,8 +13,8 @@ class AuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("clean pipeline triples audit to zero violations") {
-    val tri = Triples.fromFilesDistinctCommitted(spark,
-      Synth.corpus(spark, 40L, 6))
+    val tri = Triples.materialize(spark,
+      Pipeline.annotate(spark, Synth.corpus(spark, 40L, 6)), distinct = true)
     assert(Triples.integrityAudit(tri).isEmpty)
   }
 
@@ -62,7 +62,8 @@ class AuditSpec extends AnyFunSuite {
       SourceFile("r0", "f/ctrl.js", "c5", "js",
         "// before\u0000after the \"election\" ended.")
     ).toDS()
-    val tri = Triples.fromFilesDistinctCommitted(spark, hostile)
+    val tri = Triples.materialize(spark, Pipeline.annotate(spark, hostile),
+      distinct = true)
     tri.count() // materializes without throwing
     assert(Triples.integrityAudit(tri).isEmpty)
     // every emitted triple keeps its lineage stamp

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 
 /** Shortest-hop transitive closure (Triples.transitiveClosure) — the
   * semi-naive BFS behind kg_temporal_closure. */
@@ -71,8 +71,8 @@ class ClosureSpec extends AnyFunSuite {
   }
 
   test("pipeline closure converges under the cap on a real corpus") {
-    val tri = Triples.fromFilesDistinctCommitted(spark,
-      Synth.corpus(spark, 40L, 6))
+    val tri = Triples.materialize(spark,
+      Pipeline.annotate(spark, Synth.corpus(spark, 40L, 6)), distinct = true)
     val canon = tri.filter(col("pred") === "sameAs")
       .select(col("subj").as("ev"), col("obj").as("canon"))
     val raw = tri.filter(col("pred") === "BEFORE")

@@ -25,7 +25,6 @@ class GoldenAceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  val dataDir = "/root/reference/component/Duration/Mu_test_data"
   val repo = "eventplus"
 
   case class Rec(idx: Long, tokens: Seq[String],
@@ -115,9 +114,9 @@ class GoldenAceSpec extends AnyFunSuite {
     (hasType ++ entities ++ argTriples ++ sameAs).toSet
   }
 
-  def checkPR(file: String, minTriples: Int): Unit = {
-    val path = s"Mu_test_data/$file"
-    val ann = Sources.readAnnotationArray(spark, s"$dataDir/$file").persist()
+  def checkPR(corpus: String, minTriples: Int): Unit = {
+    val path = s"Mu_test_data/$corpus.pred.json"
+    val ann = Sources.readAnnotationArray(spark, Sources.goldenCorpus(corpus)).persist()
     try {
       val got = engineTriples(ann, path)
       val expected = expectedTriples(recordsOf(ann), path)
@@ -125,7 +124,7 @@ class GoldenAceSpec extends AnyFunSuite {
       val inter = got.intersect(expected)
       val p = inter.size.toDouble / got.size
       val r = inter.size.toDouble / expected.size
-      info(f"$file: precision=$p%.4f recall=$r%.4f " +
+      info(f"$corpus: precision=$p%.4f recall=$r%.4f " +
         s"(engine=${got.size} expected=${expected.size})")
       assert(p >= 0.95, s"precision $p; sample: ${(got -- expected).take(3)}")
       assert(r >= 0.95, s"recall $r; sample: ${(expected -- got).take(3)}")
@@ -133,12 +132,12 @@ class GoldenAceSpec extends AnyFunSuite {
   }
 
   test("reference ACE golden corpus ingests with deterministic numbering") {
-    val ann = Sources.readAnnotationArray(spark, s"$dataDir/test_ace.pred.json")
+    val ann = Sources.readAnnotationArray(spark, Sources.goldenCorpus("test_ace"))
     assert(ann.count() == 832)
     val records = recordsOf(ann)
     assert(records.map(_.events.map(_._2.size).sum).sum == 439)
     // determinism: re-read yields identical rec_idx -> tokens mapping
-    val again = Sources.readAnnotationArray(spark, s"$dataDir/test_ace.pred.json")
+    val again = Sources.readAnnotationArray(spark, Sources.goldenCorpus("test_ace"))
       .selectExpr("cast(rec_idx as long)", "tokens")
       .as[(Long, Seq[String])].collect().toMap
     assert(records.forall(r => again(r.idx) == r.tokens))
@@ -146,30 +145,30 @@ class GoldenAceSpec extends AnyFunSuite {
 
   test("engine triples over REFERENCE-produced ACE annotations: P/R vs " +
       "independent derivation >= 0.95") {
-    checkPR("test_ace.pred.json", 1000)
+    checkPR("test_ace", 1000)
   }
 
   test("engine triples over REFERENCE-produced TimeBank annotations: P/R " +
       "vs independent derivation >= 0.95") {
-    checkPR("test_tbd.pred.json", 2000)
+    checkPR("test_tbd", 2000)
   }
 
   test("engine triples over the dev ACE golden corpus (923 sentences): " +
       "P/R >= 0.95") {
-    checkPR("dev_ace.pred.json", 1000)
+    checkPR("dev_ace", 1000)
   }
 
   test("engine triples over the dev TimeBank golden corpus: P/R >= 0.95") {
-    checkPR("dev_tbd.pred.json", 800)
+    checkPR("dev_tbd", 800)
   }
 
   test("engine triples over the train TimeBank golden corpus (4032 " +
       "sentences): P/R >= 0.95") {
-    checkPR("train_tbd.pred.json", 5000)
+    checkPR("train_tbd", 5000)
   }
 
   test("lineage: every triple carries the sentence content sha") {
-    val ann = Sources.readAnnotationArray(spark, s"$dataDir/test_ace.pred.json")
+    val ann = Sources.readAnnotationArray(spark, Sources.goldenCorpus("test_ace"))
     val path = "Mu_test_data/test_ace.pred.json"
     val withSha = Triples.emit(spark,
       Pipeline.fromAnnotations(spark, ann, repo, path))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.corpus.Synth
 import graft.gold.GoldDeriver
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 import graft.text.Text
 import graft.T6
 
@@ -22,7 +22,8 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
   lazy val pipelineTriples: Set[T6] = {
     val files = Synth.corpus(spark, NFiles, Spf)
-    Triples.fromFiles(spark, files).as[T6].collect().toSet
+    Triples.materialize(spark, Pipeline.annotate(spark, files), distinct = false)
+      .as[T6].collect().toSet
   }
 
   lazy val goldTriples: Set[T6] =
@@ -59,8 +60,10 @@ class GoldenPipelineSpec extends AnyFunSuite {
   test("output is independent of input partitioning (determinism under parallelism)") {
     val files1 = Synth.corpus(spark, 12L, Spf).repartition(1)
     val files16 = Synth.corpus(spark, 12L, Spf).repartition(16)
-    val t1 = Triples.fromFiles(spark, files1).as[T6].collect().toSet
-    val t16 = Triples.fromFiles(spark, files16).as[T6].collect().toSet
+    val t1 = Triples.materialize(spark, Pipeline.annotate(spark, files1),
+      distinct = false).as[T6].collect().toSet
+    val t16 = Triples.materialize(spark, Pipeline.annotate(spark, files16),
+      distinct = false).as[T6].collect().toSet
     assert(t1 == t16)
   }
 
@@ -89,13 +92,13 @@ class GoldenPipelineSpec extends AnyFunSuite {
     assert(anchored, "some doc lost its zero-anchored predicate")
   }
 
-  test("branch-level dedup in fromFilesDistinctCommitted equals the global triple SET") {
+  test("branch-level dedup in materialize(distinct) equals the global triple SET") {
     // the distinct snapshot dedups only the two branches that can repeat
     // (arg + entity triples); this pins that shortcut to exact global
     // set semantics — any branch that ever grows duplicate rows fails here
     val files = Synth.corpus(spark, NFiles, Spf)
-    val branchDedup = Triples.fromFilesDistinctCommitted(spark, files)
-      .as[T6].collect().toSet
+    val branchDedup = Triples.materialize(spark, Pipeline.annotate(spark, files),
+      distinct = true).as[T6].collect().toSet
     assert(branchDedup == pipelineTriples) // pipelineTriples is set(emit)
   }
 

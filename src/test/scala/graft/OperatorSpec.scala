@@ -59,8 +59,8 @@ class OperatorSpec extends AnyFunSuite {
     // headsNarrow (the pipeline's shuffle-free A1) must emit exactly the
     // rows of eventHeads(headEvidence(...)) — same mean arithmetic, same
     // threshold — on real synthetic sentences
-    val sents = Pipeline.sentences(spark,
-      graft.corpus.Synth.corpus(spark, 30L, 6))
+    val sents = Pipeline.extract(spark,
+      graft.corpus.Synth.corpus(spark, 30L, 6)).flatMap(_.sent)
     val fused = Pipeline.headsNarrow(spark, Pipeline.tagStage(spark, sents))
       .as[(String, Int, String)].collect().toSet
     val relational = Pipeline.eventHeads(Pipeline.headEvidence(spark, sents))
@@ -123,6 +123,16 @@ class OperatorSpec extends AnyFunSuite {
     assert(m(("r1", "George Pataki")) == "George Pataki")
     assert(m(("r1", "the convoy")) == "the convoy")
     assert(m(("r2", "Pataki")) == "Pataki")
+    // while its refined forms stay cached, the same map reads them from
+    // the cache: materializing it does not re-run refineBlocks' windows
+    val (cached, _, forms) = Canonicalize.canonicalFormsCached(spark, mentions)
+    try {
+      val windows = cached.queryExecution.withCachedData.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window => w }
+      assert(windows.isEmpty, "form map recomputes the block refinement")
+      assert(cached.as[(String, String, String)].collect()
+        .map { case (repo, text, canon) => (repo, text) -> canon }.toMap == m)
+    } finally forms.unpersist()
   }
 
   test("local union-find CC == distributed label propagation") {
@@ -223,8 +233,8 @@ class OperatorSpec extends AnyFunSuite {
     // carries a non-global Sort and exactly the exchanges of its INPUT
     // (none for a narrow synth scan) — a global orderBy here would add a
     // rangepartitioning Exchange and turn a narrow stage into a shuffle
-    val sents = graft.kg.Pipeline.sentences(
-      spark, graft.corpus.Synth.corpus(spark, 8L, 4))
+    val sents = graft.kg.Pipeline.extract(
+      spark, graft.corpus.Synth.corpus(spark, 8L, 4)).flatMap(_.sent)
     val plan = graft.kg.Pipeline.tagStage(spark, sents)
       .queryExecution.executedPlan.toString
     assert(plan.contains("Sort"), "length sort missing from plan")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.Synth
-import graft.kg.Triples
+import graft.kg.{Pipeline, Triples}
 
 /** kg_snapshot_delta's op: the changelog between two KG snapshots must
   * satisfy the replay invariant — (prior \ dels) ∪ adds = current — with
@@ -18,10 +18,10 @@ class SnapshotDeltaSpec extends AnyFunSuite {
       df.select("subj", "pred", "obj").distinct().collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
 
-    val current = Triples.fromFilesDistinctCommitted(
-      spark, Synth.corpus(spark, 8L, 3))
-    val prior = Triples.fromFilesDistinctCommitted(
-      spark, Synth.corpus(spark, 4L, 3))
+    val current = Triples.materialize(spark,
+      Pipeline.annotate(spark, Synth.corpus(spark, 8L, 3)), distinct = true)
+    val prior = Triples.materialize(spark,
+      Pipeline.annotate(spark, Synth.corpus(spark, 4L, 3)), distinct = true)
     val cur = tripleSet(current)
     val pri = tripleSet(prior)
     assert(cur.nonEmpty && pri.nonEmpty)

@@ -93,6 +93,25 @@ class StoreSpec extends AnyFunSuite {
     assert(r.getAs[String]("stage") == "extract")
   }
 
+  test("the in-memory build fails on a record the committed build quarantines") {
+    val bad = Seq(SourceFile("badrepo", "bad/path.scala", "c0ffee", "scala", null)).toDS()
+    val files = Synth.corpus(spark, 4L, Spf).unionByName(bad)
+    val e = intercept[Exception](Pipeline.annotate(spark, files))
+    assert(e.getMessage.contains("extract quarantined badrepo/bad/path.scala"))
+  }
+
+  test("manifest round-trips an input signature with quotes, backslashes, " +
+      "newlines and non-BMP characters") {
+    val root = tmp()
+    val sig = "/data/a\\b\"c\nd\uD83D\uDE00@0123"
+    val schema = """{"type":"struct","fields":[]}"""
+    Store.writeManifest(root, Store.Manifest("s", sig, 3L, Seq(("r\"1", 3L)),
+      1L, schema))
+    assert(Store.readManifest(root, "s") == Some((sig, 3L, schema)))
+    Files.writeString(Store.manifestPath(root, "s"), "{\"inputSig\": trunc")
+    assert(Store.readManifest(root, "s").isEmpty)
+  }
+
   test("graft.Main (spark-submit entry): synth build commits all stages " +
       "and a rerun resumes from the manifests") {
     val root = tmp()
